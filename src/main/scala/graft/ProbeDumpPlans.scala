@@ -1,29 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` output for the named queries into
-  * per-query files — the plans/r14 before/after evidence. Usage:
+  * per-query files — the plans/r14..r16 before/after evidence. Usage:
   *   tools/run.sh graft.ProbeDumpPlans <outDir> <suffix> <name> [name ...]
-  * Session shape mirrors ProbeExplain (the before-file vintage): local[8],
-  * shuffle.partitions=8, sf0.01 fixtures warmed.
+  * Session shape is the test/snapshot one ([[LocalSession.FixedCores]]),
+  * sf0.01 fixtures warmed.
   */
 object ProbeDumpPlans {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val suffix = args(1)
     val names = args.drop(2).toSeq
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder(LocalSession.FixedCores).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.01"
-    try Queries.warmFixtures(spark, dir) catch { case _: Throwable => }
+    try Fixtures.warm(spark, dir) catch { case _: Throwable => }
     new java.io.File(outDir).mkdirs()
     names.foreach { n =>
       val plan = Queries.registry(n).build(spark, dir)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Host-band probe for bench-drift adjudication: run a handful of
   * registry queries N times each and print the per-query MIN — the same
   * statistic `graft.Bench` records, but isolated to queries whose source
@@ -16,14 +14,7 @@ object ProbeHostBand {
     val reps = args(1).toInt
     require(reps >= 1, s"reps must be >= 1, got $reps")
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // one untimed pass pays JIT/codegen/fixtures, as Bench's warmup does
     names.foreach(n => Queries.registry(n).build(spark, sfDir).count())

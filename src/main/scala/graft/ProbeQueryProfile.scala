@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query profile under the bench's exact session shape: wall time,
   * Spark job count, stage count, task count and summed task time for one
@@ -10,7 +9,7 @@ import org.apache.spark.sql.SparkSession
   * driver-side overhead (planning, per-job latency, round sync).
   *
   * Usage: tools/run.sh graft.ProbeQueryProfile <sfDir> <query> [query ...]
-  * Environment mirrors Bench: SPARK_GRAFT_CPUS (default 32).
+  * Environment mirrors Bench: SPARK_GRAFT_CPUS (default: all cores).
   */
 object ProbeQueryProfile {
   def main(args: Array[String]): Unit = {
@@ -19,16 +18,7 @@ object ProbeQueryProfile {
       else Seq("dedup_cluster", "dedup_cluster_altcc", "dedup_incremental",
         "knn_join", "knn_join_ann", "sim_search_ivfpq", "sim_search_pq",
         "decontaminate_bloom", "route_wellknown_keys", "log_templates")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     @volatile var jobs = 0
@@ -55,9 +45,9 @@ object ProbeQueryProfile {
     })
     spark.sparkContext.addSparkListener(listener)
 
-    try Queries.warmFixtures(spark, dir) catch { case _: Throwable => }
+    try Fixtures.warm(spark, dir) catch { case _: Throwable => }
     if (verbose) {
-      val lt = Queries.Fixtures.logTableDir(spark, dir)
+      val lt = Fixtures.logTableDir(spark, dir)
       val n = new java.io.File(lt).listFiles()
         .filter(_.getName.startsWith("date=")).map(_.listFiles()
           .count(f => f.getName.endsWith(".parquet"))).sum

@@ -75,6 +75,10 @@ object Spread {
     * row order only, so any downstream aggregate / join / final sort is
     * unaffected; callers feeding order-SENSITIVE operators (window without
     * a total order, first/last aggregates) must not use this.
+    *
+    * Assumes `keys` have high cardinality (an id column): the spread
+    * hashes on them, so a low-cardinality key would pile the rows onto a
+    * few partitions and leave the scan as under-split as before.
     */
   def maybe(df: DataFrame, keys: Column*): DataFrame = {
     val spark = df.sparkSession

@@ -33,7 +33,7 @@ object Tables {
   // hundreds of times across a bench run. A DataFrame is an immutable
   // logical plan, safe to share across queries of one session. Entries of
   // stopped sessions are evicted on access (same rationale as
-  // Queries.Fixtures.sessionScoped: value→key back-references rule out a
+  // graft.Fixtures.memo: value→key back-references rule out a
   // WeakHashMap). Staleness contract: a cached table pins the file listing
   // it was resolved with — correct for immutable datasets (the loader's
   // purpose); call [[invalidate]] after appending files to a cached dir.

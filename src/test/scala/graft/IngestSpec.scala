@@ -145,22 +145,29 @@ class IngestSpec extends SparkTestBase {
     assert(fsm("created_at").startsWith("2026-02-03 04:05:06"))
   }
 
-  test("native graft_ingest expression ≡ UDF path on a varied record sample") {
+  test("native graft_ingest expression ≡ processRecord on a varied record sample") {
     import spark.implicits._
     val recs = Seq(
       """{"cluster":"c1","kubernetes":{"namespace_name":"ns","labels":{"app":"a","k8s-app":"b"}},"log":"x","m.v":"1.5","deep":{"a":[1,"s",null,{"z":true}]}}""",
       """{"log":2,"vals":[0.5,-3]}""",
       """not json at all""",
       """{"only":"strings","n":null}""",
-    ).toDF("value")
+    )
     val cfg = graft.operators.IngestConfig(
       forceNumberFields = Seq("m.v"), forceUnderscores = true)
     val ts = graft.operators.Ingest.coerceTimestamp(lit("2024-01-01 00:00:00"))
-    val native = graft.operators.Ingest.ingestJson(recs, col("value"), ts, cfg)
-      .collect().map(_.toString).sorted
-    val viaUdf = graft.operators.Ingest.ingestJsonUdf(recs, col("value"), ts, cfg)
-      .collect().map(_.toString).sorted
-    assert(native.toSeq == viaUdf.toSeq)
+    val native = graft.operators.Ingest.ingestJson(recs.toDF("value"), col("value"), ts, cfg)
+      .collect().map(r => graft.operators.IngestedRecord(
+        r.getAs[String]("cluster"), r.getAs[String]("namespace"),
+        r.getAs[String]("app"), r.getAs[String]("pod_name"),
+        r.getAs[String]("container_name"), r.getAs[String]("host"),
+        r.getAs[String]("log"),
+        r.getMap[String, String](r.fieldIndex("fields_string")).toMap,
+        r.getMap[String, Double](r.fieldIndex("fields_number")).toMap))
+      .sortBy(_.toString)
+    val reference = recs.map(graft.operators.Ingest.processRecord(_, cfg))
+      .filter(_ != null).sortBy(_.toString)
+    assert(native.toSeq == reference)
     assert(native.length == 3) // the malformed record dropped by both
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import graft.ProbePlanShape.countExchanges
 import graft.operators.TrainPipeline
 import org.apache.spark.sql.functions._
 
@@ -12,12 +13,6 @@ class PlanAuditSpec extends SparkTestBase {
 
   private def executed(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
-
-  // count SHUFFLE exchanges only — BroadcastExchange/ReusedExchange nodes
-  // are not data-movement regressions and must not trip the exact counts
-  private def countExchanges(plan: String): Int =
-    ("Exchange (hash|range)partitioning|Exchange SinglePartition|" +
-      "Exchange RoundRobinPartitioning").r.findAllIn(plan).size
 
   test("text_chunk: pruned two-column scan, no shuffle before the presentation sort") {
     val df = TrainPipeline.chunk(
@@ -145,9 +140,7 @@ class PlanAuditSpec extends SparkTestBase {
       }.toMap
       finally src.close()
     }
-    val actual = Queries.registry.toSeq.sortBy(_._1).map { case (name, q) =>
-      name -> countExchanges(executed(q.build(spark, dir)))
-    }.toMap
+    val actual = ProbePlanShape.registryCounts(spark, dir).toMap
     val diff = (recorded.keySet ++ actual.keySet).toSeq.sorted
       .filter(k => recorded.get(k) != actual.get(k))
       .map(k => s"  $k: recorded=${recorded.get(k).orNull} actual=${actual.get(k).orNull}")
@@ -159,7 +152,7 @@ class PlanAuditSpec extends SparkTestBase {
   }
 
   test("promoted-column path: the map-number predicate reaches the parquet scan as a pushed filter") {
-    val dir = graft.Queries.Fixtures.logTableDir(spark, sf("sf0.01"))
+    val dir = Fixtures.logTableDir(spark, sf("sf0.01"))
     val df = graft.model.LogSchema.readLogs(spark, dir)
       .where(try_element_at(col("fields_number"), lit("event.value")) >= 150.0)
       .select(col("id"))

@@ -4,7 +4,8 @@ import graft.expressions.GraftFunctions
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for suites: one JVM-wide SparkSession (local[4], UTC). */
+/** Shared session for suites: one JVM-wide SparkSession, the
+  * [[LocalSession]] shape at [[LocalSession.FixedCores]]. */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
@@ -49,12 +50,8 @@ object SparkTestBase {
     // repo root under sbt — unless told otherwise
     System.setProperty("derby.stream.error.file",
       sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-derby.log")
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = LocalSession.builder(LocalSession.FixedCores)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     GraftFunctions.registerAll(s)

@@ -10,7 +10,6 @@
 set -euo pipefail
 SF_DIR=$1; OUT=$2; PRIOR=$3; PRIOR_REF=$4
 cd "$(dirname "$0")/.."
-SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
-  tools/run.sh graft.Bench 2>&1 | grep '{"metric"' | tail -1 > "$OUT"
+SPARK_GRAFT_SF_DIR="$SF_DIR" tools/run.sh graft.Bench 2>&1 | grep '{"metric"' | tail -1 > "$OUT"
 python3 tools/band_adjudicate.py "$OUT" "$PRIOR" "$PRIOR_REF" "$SF_DIR" \
   | tee -a BASELINE.md
